@@ -7,12 +7,11 @@ fuse their Spark work:
 
 - SchemaCheck  — driver-only, evaluated from ``df.schema`` (no job).
 - MapCheck     — a per-row boolean *unexpected* condition; its
-                 considered/unexpected counts are fused into ONE
-                 ``df.agg(...)`` for the whole suite, and its
-                 violation values are harvested in ONE shared
-                 explode+bounded-collect pass.
+                 considered/unexpected counts and its bounded
+                 violation sample ride ONE per-partition agg job for
+                 the whole domain (plans/single_pass.py).
 - AggCheck     — needs named aggregate expressions (fused into the
-                 same single ``df.agg``) and finalizes driver-side.
+                 same single pass) and finalizes driver-side.
 - JobCheck     — needs its own Spark job(s) (two-phase uniqueness,
                  anti-join referential, quantiles, value_counts,
                  monotonicity with partition-boundary exchange, ...).
@@ -87,7 +86,7 @@ class MapCheck(BaseCheck):
 
 @dataclass
 class AggCheck(BaseCheck):
-    """Aggregate check fused into the single suite-wide df.agg().
+    """Aggregate check fused into the domain's single pass.
 
     ``needs`` maps stat-key -> aggregate Column; keys are deduped
     across the suite (GE's metric-id dedup, validation_graph.py:92-96,
@@ -105,7 +104,7 @@ class JobCheck(BaseCheck):
     ``prefetch``, when set, performs the check's Spark-side work
     against the shared MetricCache WITHOUT needing resolved stats —
     the planner launches prefetches on worker threads concurrently
-    with the phase-1 single-pass scan (Spark schedules concurrent
+    with the domain's single-pass scan (Spark schedules concurrent
     jobs fairly), so independent jobs overlap instead of running
     serially. ``run`` then finds its metrics memoized.
     """
@@ -167,6 +166,14 @@ class MetricCache:
             with self._global_lock:
                 self._memo[key] = value
             return value
+
+    def num_partitions(self) -> int:
+        """The domain frame's partition count — physical planning, no
+        job, but not free (~20 ms for a small parquet scan), so every
+        per-partition job of the domain shares one answer."""
+        return self._get(
+            "num_partitions", lambda: self.df.rdd.getNumPartitions()
+        )
 
     def head(self, n_rows: int = 5, fetch_all: bool = False):
         """table.head — first rows as a list of dicts (reference

@@ -82,10 +82,9 @@ def _distinct_count_need(column: str, cfg, schema=None):
     MERGEABLE Datasketches sketch partial — fused into the one
     per-partition pass (no extra scan) and union-mergeable across
     second-level buckets AND incremental checkpoint runs. Other types
-    (and the classic strategy) use approx_count_distinct (HLL++) as a
-    leftover aggregate. No reference counterpart (its Spark engine is
-    exact-only, column_distinct_values.py:126-137); opt-in, default
-    exact."""
+    use approx_count_distinct (HLL++) as a leftover aggregate. No
+    reference counterpart (its Spark engine is exact-only,
+    column_distinct_values.py:126-137); opt-in, default exact."""
     c = F.col(column)
     if cfg.kwargs.get("approximate"):
         rsd = float(cfg.kwargs.get("rsd", 0.05))
@@ -293,10 +292,13 @@ def compile_quantile_values_between(index, cfg, schema):
                 ),
             )
 
-    def run(df, stats, cache: MetricCache):
-        return outcome(cache.quantiles(column, quantiles, rel_err))
+    def spark_work(df, cache: MetricCache):
+        return cache.quantiles(column, quantiles, rel_err)
 
-    return JobCheck(index=index, config=cfg, run=run)
+    def run(df, stats, cache: MetricCache):
+        return outcome(spark_work(df, cache))
+
+    return JobCheck(index=index, config=cfg, run=run, prefetch=spark_work)
 
 
 def _distinct_outcome(cache: MetricCache, column: str):
@@ -304,6 +306,12 @@ def _distinct_outcome(cache: MetricCache, column: str):
     observed_set = {v for v, _ in vc}
     details = {"value_counts": [{"value": v, "count": c} for v, c in vc]}
     return observed_set, details
+
+
+def _value_counts_prefetch(column: str):
+    """Stats-independent prefetch of the cached value_counts metric,
+    so the groupBy job overlaps the domain's scan."""
+    return lambda df, cache: cache.value_counts(column)
 
 
 def compile_distinct_in_set(index, cfg, schema):
@@ -319,7 +327,10 @@ def compile_distinct_in_set(index, cfg, schema):
             "details": details,
         }
 
-    return JobCheck(index=index, config=cfg, run=run)
+    return JobCheck(
+        index=index, config=cfg, run=run,
+        prefetch=_value_counts_prefetch(column),
+    )
 
 
 def compile_distinct_contain_set(index, cfg, schema):
@@ -334,7 +345,10 @@ def compile_distinct_contain_set(index, cfg, schema):
             "details": details,
         }
 
-    return JobCheck(index=index, config=cfg, run=run)
+    return JobCheck(
+        index=index, config=cfg, run=run,
+        prefetch=_value_counts_prefetch(column),
+    )
 
 
 def compile_distinct_equal_set(index, cfg, schema):
@@ -349,7 +363,10 @@ def compile_distinct_equal_set(index, cfg, schema):
             "details": details,
         }
 
-    return JobCheck(index=index, config=cfg, run=run)
+    return JobCheck(
+        index=index, config=cfg, run=run,
+        prefetch=_value_counts_prefetch(column),
+    )
 
 
 def compile_most_common_value_in_set(index, cfg, schema):

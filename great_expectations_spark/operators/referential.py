@@ -4,14 +4,19 @@ QueryExpectation SQL, SURVEY.md §2.2 "Joins").
 
 expect_foreign_keys_to_exist: every (non-null) foreign-key tuple in the
 batch must exist in a reference table. Implemented as a left-anti join
-against the distinct key projection of the dimension side; the
-dimension is broadcast when small (explicit hint via ``broadcast=True``
-or left to AQE + autoBroadcastJoinThreshold otherwise). Violation rows
-are exactly the anti-join output.
+against the key projection of the dimension side (no distinct: an anti
+join ignores duplicate keys, so deduplicating would only add a
+shuffle); the dimension is broadcast when small (explicit hint via
+``broadcast=True`` or left to autoBroadcastJoinThreshold otherwise).
+Violation rows are exactly the anti-join output; their count and a
+bounded, partition-id-ordered sample come from one per-partition job
+(plans/single_pass.run_single_pass), which the planner prefetches
+concurrently with the domain's scan.
 """
 
 from __future__ import annotations
 
+import json
 from functools import reduce
 from typing import Any, Dict, List
 
@@ -19,8 +24,21 @@ from pyspark.sql import functions as F
 
 from ..core.config import parse_result_format, result_format_at_least
 from ..core.result import format_map_output, mostly_success
+from ..plans.single_pass import (
+    merge_stat_rows,
+    pid_ordered_sample,
+    plan_stat_partials,
+    run_single_pass,
+    violation_collect_expr,
+)
 from .checks import JobCheck, MetricCache
-from .common import get_mostly
+from .common import (
+    decode_single,
+    get_mostly,
+    json_multi,
+    json_value,
+    make_decode_multi,
+)
 
 
 def compile_foreign_keys_exist(index, cfg, schema) -> JobCheck:
@@ -42,24 +60,26 @@ def compile_foreign_keys_exist(index, cfg, schema) -> JobCheck:
         lambda a, b: a & b, [F.col(c).isNotNull() for c in columns]
     )
     consider_key = f"fk:{':'.join(columns)}"
+    if len(columns) == 1:
+        value, decode = json_value(F.col(columns[0])), decode_single
+    else:
+        value, decode = json_multi(columns), make_decode_multi(columns)
 
-    def run(df, stats: Dict[str, Any], cache: MetricCache):
+    def _rf_and_cap(cache: MetricCache):
         rf = parse_result_format(
             cfg.kwargs.get("result_format", cache.result_format)
         )
-        aux = cache.aux_tables
-        if ref_table not in aux:
-            raise ValueError(
-                f"reference table {ref_table!r} not provided to the validator"
-            )
-        element_count = stats["table.row_count"]
-        considered = stats[f"considered:{consider_key}"]
+        if rf["result_format"] == "BOOLEAN_ONLY":
+            return rf, 0
+        if result_format_at_least(rf, "COMPLETE"):
+            return rf, cache.complete_cap
+        return rf, rf["partial_unexpected_count"]
 
-        dim = (
-            aux[ref_table]
-            .select(*[F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(ref_columns)])
-            .distinct()
-        )
+    def orphans_of(df, dim_df, cap, df_parts):
+        """(orphan count, decoded sample of at most cap) in one job."""
+        dim = dim_df.select(*[
+            F.col(rc).alias(f"__ref_{i}") for i, rc in enumerate(ref_columns)
+        ])
         if force_broadcast:
             dim = F.broadcast(dim)
         join_cond = reduce(
@@ -69,26 +89,49 @@ def compile_foreign_keys_exist(index, cfg, schema) -> JobCheck:
                 for i, c in enumerate(columns)
             ],
         )
-        # Orphans: FK tuples absent from the dimension. Aggregate count
-        # + bounded sample in one cached anti-join plan.
         orphans = df.where(nonnull).join(dim, join_cond, "left_anti")
-        unexpected_count = orphans.count()
+        partials, merges, _ = plan_stat_partials(
+            {"table.row_count": F.count(F.lit(1))}
+        )
+        samples = []
+        if cap:
+            samples.append(violation_collect_expr(
+                df.sparkSession, F.lit(True), value, cap, "v"
+            ))
+        # orphan partitions: the fact side's (broadcast join) or the
+        # shuffle's — bound both so the second-level merge engages
+        # without planning the join an extra time
+        n_parts = max(
+            df_parts,
+            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        )
+        rows = run_single_pass(
+            orphans, partials, samples, merges=merges,
+            viol_caps={"v": cap} if cap else {}, n_parts=n_parts,
+        )
+        count = merge_stat_rows(rows, merges)["table.row_count"]
+        sample = pid_ordered_sample(rows, "v", cap) if cap else []
+        return count, [decode(json.loads(v)) for v in sample]
 
-        unexpected_list = None
-        if rf["result_format"] != "BOOLEAN_ONLY":
-            cap = (
-                cache.complete_cap
-                if result_format_at_least(rf, "COMPLETE")
-                else rf["partial_unexpected_count"]
+    def spark_work(df, cache: MetricCache):
+        aux = cache.aux_tables
+        if ref_table not in aux:
+            raise ValueError(
+                f"reference table {ref_table!r} not provided to the validator"
             )
-            rows = orphans.select(*columns).limit(cap).collect()
-            if len(columns) == 1:
-                unexpected_list = [r[0] for r in rows]
-            else:
-                unexpected_list = [
-                    {c: r[c] for c in columns} for r in rows
-                ]
+        _, cap = _rf_and_cap(cache)
+        return cache._get(
+            f"fk_orphans:{ref_table}:{columns}:{ref_columns}:{cap}",
+            lambda: orphans_of(
+                df, aux[ref_table], cap, cache.num_partitions()
+            ),
+        )
 
+    def run(df, stats: Dict[str, Any], cache: MetricCache):
+        rf, _ = _rf_and_cap(cache)
+        element_count = stats["table.row_count"]
+        considered = stats[f"considered:{consider_key}"]
+        unexpected_count, sample = spark_work(df, cache)
         success = (
             True
             if element_count == 0 or considered == 0
@@ -100,7 +143,9 @@ def compile_foreign_keys_exist(index, cfg, schema) -> JobCheck:
             element_count=element_count,
             nonnull_count=considered,
             unexpected_count=unexpected_count,
-            unexpected_list=unexpected_list,
+            unexpected_list=(
+                None if rf["result_format"] == "BOOLEAN_ONLY" else sample
+            ),
         )
         return out["success"], out.get("result", {})
 
@@ -114,6 +159,7 @@ def compile_foreign_keys_exist(index, cfg, schema) -> JobCheck:
             ),
         },
         run=run,
+        prefetch=spark_work,
     )
 
 

@@ -1,43 +1,44 @@
-"""Suite → fused-pass compiler and executor (the engine core).
+"""Suite → per-domain execution plan and executor (the engine core).
 
 Where the reference resolves a metric DAG iteratively with one-or-more
 Spark actions per metric (validator/validation_graph.py:177-319,
-sparkdf_execution_engine.py:669-747), we compile the whole suite into a
-fixed small number of Spark jobs:
+sparkdf_execution_engine.py:669-747), we compile the whole suite into
+one execution path per row_condition domain with a fixed small number
+of Spark jobs:
 
-  phase 0  schema checks               driver-only, 0 jobs
-  phase 1  ONE fused df.agg(...)       row count, per-column nonnull /
-                                       considered counts, min/max/mean/
-                                       stddev/sum/countDistinct, and the
-                                       unexpected-count of every
-                                       non-deferred map condition
-  phase 1b deferred-condition agg      only if a condition needs fused
-                                       stats first (z-score): 1 more job
-  phase 2  violations harvest          ONE scan for ALL map checks with
-                                       violations: array-of-struct →
-                                       explode → two-level BOUNDED
-                                       collect (per-partition slice K,
-                                       then global slice K) — memory is
-                                       O(K × checks × partitions), never
-                                       O(rows), unlike the reference's
-                                       full collects
-                                       (map_metric_provider.py:2589-2601)
-  phase 3  job checks                  uniqueness (two-phase hash agg),
-                                       referential anti-joins, value
-                                       metrics (quantiles/value_counts/
-                                       histograms) — deduped via a
-                                       shared MetricCache
-  driver   mostly / bounds / drift math → EVRs → suite result
+  schema checks      driver-only, 0 jobs
+  job prefetches     started on worker threads BEFORE the scan, so
+                     independent work (two-phase uniqueness, the
+                     referential anti-join, quantiles, value counts)
+                     overlaps it instead of queuing behind it
+  single pass        ONE per-partition agg job (plans/single_pass.py):
+                     row count, per-column nonnull / considered counts,
+                     min/max/mean/stddev/sum/sketches, the unexpected
+                     count of every map condition, and each map
+                     check's bounded violation sample (per-partition
+                     slice K, concatenated in partition-id order) —
+                     memory is O(K x checks x partitions), never
+                     O(rows), unlike the reference's full collects
+                     (map_metric_provider.py:2589-2601). Non-mergeable
+                     stats (exact countDistinct) run as a concurrent,
+                     column-pruned leftover agg.
+  deferred follow-up only when a map condition needs the resolved
+                     stats first (z-score): ONE more job through the
+                     same executor, carrying those conditions' counts
+                     and bounded samples
+  job checks         finalize from their memoized prefetch results
+  driver             mostly / bounds / drift math → EVRs → suite result
 
 Catalyst handles predicate pushdown + column pruning from the fused
-expression set; the stats pass never references unneeded columns (at
-scale: never reads the image `bytes` column unless a payload check is
-in the suite).
+expression set; the scans never reference unneeded columns (at scale:
+never read the image `bytes` column unless a payload check is in the
+suite).
 """
 
 from __future__ import annotations
 
 import json
+import threading
 import time
 import traceback
 from collections import defaultdict
@@ -71,6 +72,7 @@ from ..functions.row_conditions import domain_condition
 from ..operators.registry import get_compiler
 from .single_pass import (
     merge_stat_rows,
+    pid_ordered_sample,
     plan_stat_partials,
     run_single_pass,
     violation_collect_expr,
@@ -83,6 +85,15 @@ def _considered_stat_key(consider_key: str) -> str:
     if consider_key.startswith("nonnull:"):
         return consider_key
     return f"considered:{consider_key}"
+
+
+def _unexpected(chk: MapCheck, stats: Dict[str, Any]):
+    """(unexpected condition restricted to the considered rows, JSON
+    value column) of a map check, built against ``stats``."""
+    cond, value = chk.build(stats)
+    if chk.consider is not None:
+        cond = chk.consider() & cond
+    return cond, value
 
 
 def split_checks(checks: List[Any]):
@@ -117,10 +128,7 @@ def collect_agg_exprs(
         for k, e in chk.stat_needs.items():
             agg_exprs.setdefault(k, e)
         if not chk.deferred:
-            cond, _ = chk.build({})
-            full = (
-                (chk.consider() & cond) if chk.consider is not None else cond
-            )
+            full, _ = _unexpected(chk, {})
             agg_exprs[f"unexpected:{chk.index}"] = F.sum(
                 F.when(full, 1).otherwise(0)
             )
@@ -139,7 +147,6 @@ class DomainPlan:
 
     __slots__ = (
         "agg_exprs",
-        "use_single",
         "partials",
         "merges",
         "leftover",
@@ -147,15 +154,31 @@ class DomainPlan:
         "caps",
     )
 
-    def __init__(self, agg_exprs, use_single, partials, merges, leftover,
+    def __init__(self, agg_exprs, partials, merges, leftover,
                  violation_exprs, caps):
         self.agg_exprs = agg_exprs
-        self.use_single = use_single
         self.partials = partials
         self.merges = merges
         self.leftover = leftover
         self.violation_exprs = violation_exprs
         self.caps = caps
+
+
+def _pid_ordered_samples(
+    rows: List[Any], checks: List[MapCheck], caps: Dict[int, int]
+) -> Dict[int, List[Any]]:
+    """Each check's violation sample: its per-partition slices
+    concatenated in partition-id order (deterministic), cut at the
+    cap and decoded. A check without a cap (BOOLEAN_ONLY) gets []."""
+    out: Dict[int, List[Any]] = {}
+    for chk in checks:
+        cap = caps.get(chk.index)
+        raw = (
+            [] if cap is None
+            else pid_ordered_sample(rows, f"v{chk.index}", cap)
+        )
+        out[chk.index] = [chk.value_decoder(json.loads(s)) for s in raw]
+    return out
 
 
 class _Domain:
@@ -205,10 +228,20 @@ class SparkValidator:
         self.result_format = parse_result_format(result_format)
         self.complete_cap = complete_cap
         self.catch_exceptions = catch_exceptions
-        if strategy not in ("auto", "single_pass", "classic"):
-            raise ValueError(f"unknown strategy {strategy!r}")
-        self.strategy = strategy
+        # every domain runs the one single-pass path; ``strategy`` is
+        # accepted for callers written against the removed two-scan
+        # plan and changes nothing
+        if strategy not in ("auto", "single_pass"):
+            raise ValueError(
+                f"unknown strategy {strategy!r}: the engine has one "
+                "execution path ('auto' / 'single_pass')"
+            )
         self.phase_times: Dict[str, float] = {}
+
+    def _add_phase(self, phase: str, seconds: float) -> None:
+        self.phase_times[phase] = round(
+            self.phase_times.get(phase, 0.0) + seconds, 3
+        )
 
     def _clock(self, phase: str, fn):
         """Record wall time of one engine phase into phase_times
@@ -217,9 +250,7 @@ class SparkValidator:
         try:
             return fn()
         finally:
-            self.phase_times[phase] = round(
-                self.phase_times.get(phase, 0.0) + time.time() - t0, 3
-            )
+            self._add_phase(phase, time.time() - t0)
 
     # -- public ---------------------------------------------------------------
 
@@ -357,56 +388,40 @@ class SparkValidator:
         return exc_entries, domains
 
     def _plan_domain(
-        self, spark, map_checks, agg_checks, job_checks,
-        force_single: bool = False,
+        self, spark, map_checks, agg_checks, job_checks
     ) -> DomainPlan:
         """Build one domain's DomainPlan: the fused stat expressions,
         their partial/merge split for the single-pass executor, and the
-        bounded violation collectors. Schema- and option-dependent
-        only — reusable across every batch with the same schema.
-
-        ``force_single`` is for callers that always execute the
-        per-partition partial plan and handle deferred conditions at
-        their own finalize (the checkpoint runner's per-group grid).
-        """
+        bounded violation collectors of the non-deferred map checks.
+        Schema- and option-dependent only — reusable across every batch
+        with the same schema (and shared with the checkpoint runner's
+        per-group grid)."""
         agg_exprs = collect_agg_exprs(map_checks, agg_checks, job_checks)
-
-        # strategy: the single-pass executor computes the fused stats
-        # AND the bounded violation samples in ONE per-partition agg
-        # job (payloads decode once); deferred conditions (z-score)
-        # need resolved stats first, so they force the classic plan.
-        use_single = force_single or (
-            self.strategy in ("auto", "single_pass")
-            and not any(c.deferred for c in map_checks)
-        )
-
-        partials = merges = leftover = None
+        partials, merges, leftover = plan_stat_partials(agg_exprs)
         violation_exprs: List[Any] = []
         caps: Dict[int, int] = {}
-        if use_single and agg_exprs:
-            partials, merges, leftover = plan_stat_partials(agg_exprs)
-            for chk in map_checks:
-                if chk.deferred:
-                    continue
-                rf = self._rf_for(chk)
-                if rf["result_format"] == "BOOLEAN_ONLY":
-                    continue
-                caps[chk.index] = self._cap_for(chk, rf)
-                cond, value = chk.build({})
-                full = (
-                    (chk.consider() & cond)
-                    if chk.consider is not None
-                    else cond
-                )
-                violation_exprs.append(
-                    violation_collect_expr(
-                        spark, full, value, caps[chk.index], f"v{chk.index}"
-                    )
-                )
+        for chk in map_checks:
+            if not chk.deferred:
+                self._sample_expr(spark, chk, {}, caps, violation_exprs)
         return DomainPlan(
-            agg_exprs, use_single, partials, merges, leftover,
-            violation_exprs, caps,
+            agg_exprs, partials, merges, leftover, violation_exprs, caps
         )
+
+    def _sample_expr(self, spark, chk, stats, caps, violation_exprs):
+        """Append the check's bounded violation-sample collector to
+        ``violation_exprs`` and its cap to ``caps`` — unless its result
+        format is BOOLEAN_ONLY, which reports no sample. Returns the
+        check's unexpected condition."""
+        full, value = _unexpected(chk, stats)
+        rf = self._rf_for(chk)
+        if rf["result_format"] != "BOOLEAN_ONLY":
+            caps[chk.index] = self._cap_for(chk, rf)
+            violation_exprs.append(
+                violation_collect_expr(
+                    spark, full, value, caps[chk.index], f"v{chk.index}"
+                )
+            )
+        return full
 
     def _validate_domain(
         self, df: DataFrame, checks: List[Any], evrs, plan: Optional[DomainPlan] = None
@@ -415,7 +430,7 @@ class SparkValidator:
             checks
         )
 
-        # phase 0: schema checks — no Spark job
+        # schema checks — no Spark job
         for chk in schema_checks:
             try:
                 success, result = chk.evaluate(df.schema)
@@ -429,7 +444,7 @@ class SparkValidator:
                     chk.config, exc, traceback.format_exc()
                 )
 
-        # phase 1: the fused stat-expression set — precompiled when a
+        # the fused stat-expression set — precompiled when a
         # CompiledSuite supplied the plan, else built now
         if plan is None:
             plan = self._clock(
@@ -438,83 +453,53 @@ class SparkValidator:
                     df.sparkSession, map_checks, agg_checks, job_checks
                 ),
             )
-        agg_exprs = plan.agg_exprs
-        use_single = plan.use_single
 
-        # shared metric cache, created BEFORE phase 1 so JobCheck
-        # prefetches can overlap the single-pass scan: Spark schedules
-        # concurrently-submitted jobs across the same executors, so
-        # independent work (two-phase uniqueness, leftover aggs) hides
-        # behind the payload scan instead of serializing after it
+        # shared metric cache, created BEFORE the scan so JobCheck
+        # prefetches overlap it: Spark schedules concurrently-submitted
+        # jobs across the same executors, so independent work hides
+        # behind the scan instead of serializing after it
         cache = MetricCache(df)
         cache.result_format = self.result_format
         cache.complete_cap = self.complete_cap
         cache.aux_tables = self.aux_tables
         prefetch_threads: List[Any] = []
-        import threading as _threading
+        prefetch_s: Dict[int, float] = {}
 
         for chk in job_checks:
             if chk.prefetch is None:
                 continue
 
             def _bg(chk=chk):
+                t0 = time.time()
                 try:
                     chk.prefetch(df, cache)
                 except Exception:  # noqa: BLE001 - run() re-raises
                     pass
+                finally:
+                    prefetch_s[chk.index] = time.time() - t0
 
-            t = _threading.Thread(target=_bg, daemon=True)
+            t = threading.Thread(target=_bg, daemon=True)
             t.start()
             prefetch_threads.append(t)
 
         stats: Dict[str, Any] = {}
-        unexpected_lists: Optional[Dict[int, List[Any]]] = None
-        if use_single and agg_exprs:
+        unexpected_lists: Dict[int, List[Any]] = {}
+        if plan.agg_exprs:  # empty for a schema-only domain
             stats, unexpected_lists = self._clock(
                 "single_pass",
-                lambda: self._run_single_pass(df, plan, map_checks),
+                lambda: self._run_single_pass(
+                    df, plan, map_checks, cache.num_partitions()
+                ),
             )
-        elif agg_exprs:
-            keys = list(agg_exprs)
-            row = self._clock(
-                "fused_agg",
-                lambda: df.agg(
-                    *[agg_exprs[k].alias(f"s{i}") for i, k in enumerate(keys)]
-                ).first(),
-            )
-            stats = {k: row[f"s{i}"] for i, k in enumerate(keys)}
-            # sums over empty frames come back NULL — normalize to 0
-            for k, v in stats.items():
-                if v is None and (
-                    k.startswith(("nonnull:", "considered:", "unexpected:"))
-                ):
-                    stats[k] = 0
-
-        # phase 1b: deferred map conditions (need stats first)
         deferred = [c for c in map_checks if c.deferred]
-        if deferred and stats.get("table.row_count", 0) > 0:
-            exprs = []
-            for chk in deferred:
-                cond, _ = chk.build(stats)
-                full = (
-                    (chk.consider() & cond) if chk.consider is not None else cond
+        if deferred:
+            unexpected_lists.update(
+                self._clock(
+                    "deferred",
+                    lambda: self._run_deferred(
+                        df, deferred, stats, cache.num_partitions()
+                    ),
                 )
-                exprs.append(
-                    F.sum(F.when(full, 1).otherwise(0)).alias(f"u{chk.index}")
-                )
-            row = df.agg(*exprs).first()
-            for chk in deferred:
-                stats[f"unexpected:{chk.index}"] = row[f"u{chk.index}"] or 0
-        else:
-            for chk in deferred:
-                stats[f"unexpected:{chk.index}"] = 0
-
-        # phase 2: violations harvest — already produced by the
-        # single-pass job, else one dedicated scan for ALL map checks
-        if unexpected_lists is None:
-            unexpected_lists = self._clock(
-                "harvest",
-                lambda: self._harvest_violations(df, map_checks, stats),
             )
 
         # map-check EVRs
@@ -544,15 +529,17 @@ class SparkValidator:
                     chk.config, exc, traceback.format_exc()
                 )
 
-        # phase 3: job checks (prefetched Spark work is memoized in
-        # the cache; join the background threads first)
+        # job checks: prefetched Spark work is memoized in the cache;
+        # join the background threads first. A prefetched check's
+        # phase time includes its background wall time.
         for t in prefetch_threads:
             t.join()
         for chk in job_checks:
+            phase = f"job:{chk.config.expectation_type}"
+            self._add_phase(phase, prefetch_s.get(chk.index, 0.0))
             try:
                 success, result = self._clock(
-                    f"job:{chk.config.expectation_type}",
-                    lambda chk=chk: chk.run(df, stats, cache),
+                    phase, lambda chk=chk: chk.run(df, stats, cache)
                 )
                 evrs[chk.index] = ExpectationValidationResult(
                     success=success, expectation_config=chk.config, result=result
@@ -565,7 +552,8 @@ class SparkValidator:
                 )
 
     def _run_single_pass(
-        self, df: DataFrame, plan: DomainPlan, map_checks: List[MapCheck]
+        self, df: DataFrame, plan: DomainPlan, map_checks: List[MapCheck],
+        n_parts: Optional[int] = None,
     ):
         """ONE per-partition agg job for stats + violation samples.
 
@@ -574,8 +562,7 @@ class SparkValidator:
         stays a cheap scalar scan that never reads payload columns.
         All expressions come precompiled from the DomainPlan.
         """
-        partials, merges, leftover = plan.partials, plan.merges, plan.leftover
-        caps, violation_exprs = plan.caps, plan.violation_exprs
+        leftover = plan.leftover
 
         # the leftover agg depends only on df — submit it on a worker
         # thread so it runs concurrently with the single-pass job
@@ -583,7 +570,6 @@ class SparkValidator:
         leftover_thread = None
         if leftover:
             keys = list(leftover)
-            import threading as _threading
 
             def _leftover():
                 try:
@@ -596,19 +582,18 @@ class SparkValidator:
                 except Exception as exc:  # noqa: BLE001
                     leftover_holder["error"] = exc
 
-            leftover_thread = _threading.Thread(
-                target=_leftover, daemon=True
-            )
+            leftover_thread = threading.Thread(target=_leftover, daemon=True)
             leftover_thread.start()
 
         rows = run_single_pass(
             df,
-            partials,
-            violation_exprs,
-            merges=merges,
-            viol_caps={f"v{i}": cap for i, cap in caps.items()},
+            plan.partials,
+            plan.violation_exprs,
+            merges=plan.merges,
+            viol_caps={f"v{i}": cap for i, cap in plan.caps.items()},
+            n_parts=n_parts,
         )
-        stats = merge_stat_rows(rows, merges)
+        stats = merge_stat_rows(rows, plan.merges)
 
         if leftover_thread is not None:
             self._clock("leftover_join", leftover_thread.join)
@@ -618,88 +603,51 @@ class SparkValidator:
             for i, k in enumerate(keys):
                 stats[k] = row[f"s{i}"]
 
-        # deterministic concat order across partitions, then cap
-        rows_sorted = sorted(rows, key=lambda r: r["__pid"])
-        unexpected_lists: Dict[int, List[Any]] = {}
-        for chk in map_checks:
-            cap = caps.get(chk.index)
-            if cap is None:
-                unexpected_lists[chk.index] = []
-                continue
-            merged: List[Any] = []
-            for r in rows_sorted:
-                merged.extend(r[f"v{chk.index}"] or [])
-                if len(merged) >= cap:
-                    break
-            unexpected_lists[chk.index] = [
-                chk.value_decoder(json.loads(s)) for s in merged[:cap]
-            ]
-        return stats, unexpected_lists
+        return stats, _pid_ordered_samples(rows, map_checks, plan.caps)
 
-    def _harvest_violations(
-        self, df: DataFrame, map_checks: List[MapCheck], stats: Dict[str, Any]
+    def _run_deferred(
+        self, df: DataFrame, deferred: List[MapCheck], stats: Dict[str, Any],
+        n_parts: Optional[int] = None,
     ) -> Dict[int, List[Any]]:
-        """One scan collecting bounded per-check violation values.
-
-        Builds array<struct<c:int,v:string>> of per-check violating
-        JSON values, explodes the non-null entries, then bounds memory
-        with a two-level slice(collect_list): per (spark partition,
-        check) first, then per check. Replaces the reference's
-        per-metric filter+collect jobs
-        (map_metric_provider.py:2555-2601) with a single pass.
-        """
-        wanted: List[MapCheck] = []
+        """The follow-up job for deferred map conditions (z-score),
+        whose conditions need the resolved ``stats``: the same
+        per-partition executor as the single pass, carrying each
+        condition's sum(when) count and bounded violation sample, so
+        counts and pid-ordered samples come from ONE column-pruned
+        scan. Writes ``unexpected:<i>`` into ``stats`` and returns the
+        samples. A check with no rows to consider (empty domain,
+        all-NULL column) is 0 unexpected without any job."""
+        counts: Dict[str, Any] = {}
+        violation_exprs: List[Any] = []
         caps: Dict[int, int] = {}
-        for chk in map_checks:
-            rf = self._rf_for(chk)
-            if rf["result_format"] == "BOOLEAN_ONLY":
-                continue
-            if stats.get(f"unexpected:{chk.index}", 0) == 0:
-                continue
-            wanted.append(chk)
-            caps[chk.index] = self._cap_for(chk, rf)
-        if not wanted:
-            return {chk.index: [] for chk in map_checks}
-
-        k_max = max(caps.values())
-        entries = []
-        for chk in wanted:
-            cond, value = chk.build(stats)
-            full = (chk.consider() & cond) if chk.consider is not None else cond
-            entries.append(
-                F.when(
-                    full,
-                    F.struct(
-                        F.lit(chk.index).cast("int").alias("c"), value.alias("v")
-                    ),
-                )
+        for chk in deferred:
+            stats[f"unexpected:{chk.index}"] = 0
+            considered = (
+                _considered_stat_key(chk.consider_key)
+                if chk.consider is not None
+                else "table.row_count"
             )
-        arr = F.array(*entries)
-        exploded = df.select(
-            F.explode(F.filter(arr, lambda x: x.isNotNull())).alias("e")
-        ).select(
-            F.col("e.c").alias("c"),
-            F.col("e.v").alias("v"),
-            F.spark_partition_id().alias("p"),
+            if not stats.get(considered):
+                continue
+            full = self._sample_expr(
+                df.sparkSession, chk, stats, caps, violation_exprs
+            )
+            counts[f"unexpected:{chk.index}"] = F.sum(
+                F.when(full, 1).otherwise(0)
+            )
+        if not counts:
+            return {chk.index: [] for chk in deferred}
+        partials, merges, _ = plan_stat_partials(counts)
+        rows = run_single_pass(
+            df,
+            partials,
+            violation_exprs,
+            merges=merges,
+            viol_caps={f"v{i}": cap for i, cap in caps.items()},
+            n_parts=n_parts,
         )
-        lvl1 = exploded.groupBy("p", "c").agg(
-            F.slice(F.collect_list("v"), 1, k_max).alias("vs")
-        )
-        rows = (
-            lvl1.groupBy("c")
-            .agg(F.slice(F.flatten(F.collect_list("vs")), 1, k_max).alias("vs"))
-            .collect()
-        )
-        by_index = {r["c"]: r["vs"] for r in rows}
-        out: Dict[int, List[Any]] = {}
-        for chk in map_checks:
-            raw = by_index.get(chk.index, [])
-            cap = caps.get(chk.index, 0)
-            decoded = [
-                chk.value_decoder(json.loads(s)) for s in raw[:cap]
-            ]
-            out[chk.index] = decoded
-        return out
+        stats.update(merge_stat_rows(rows, merges))
+        return _pid_ordered_samples(rows, deferred, caps)
 
     def _finalize_map_check(
         self,
@@ -729,8 +677,7 @@ class SparkValidator:
 
         unexpected_rows = None
         if rf.get("include_unexpected_rows"):
-            cond, _ = chk.build(stats)
-            full = (chk.consider() & cond) if chk.consider is not None else cond
+            full, _ = _unexpected(chk, stats)
             collected = df.filter(full).limit(rf["partial_unexpected_count"]).collect()
             unexpected_rows = [r.asDict() for r in collected]
 

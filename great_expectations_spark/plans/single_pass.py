@@ -1,9 +1,9 @@
 """Single-pass per-partition suite execution.
 
-The classic plan (plans/planner.py) runs phase 1 (fused df.agg) and
-phase 2 (violations harvest) as two separate scans. For payload-heavy
-tables that means decoding every image twice. This module compiles the
-same work into ONE Spark job:
+Every row_condition domain (plans/planner.py) and every checkpoint
+group (checkpoint/runner.py) executes through this module: the fused
+stats and the bounded violation samples of all map checks are ONE
+Spark job, so payload-heavy tables decode every image once:
 
     df.groupBy(spark_partition_id()).agg(
         <partial stats: counts / sums / mins / maxs / (n, mean, M2)>,
@@ -32,7 +32,9 @@ never an option (it would drag every row through Arrow).
 Aggregates that cannot be merged from partition partials
 (countDistinct) go to a LEFTOVER df.agg job — which Catalyst
 column-prunes, so it never touches payload columns and costs a cheap
-scalar scan.
+scalar scan. Map conditions that need the merged stats first (z-score)
+run through run_single_pass once more, as one follow-up job carrying
+their counts and samples.
 
 This is the literal realization of the target architecture: "all
 per-column stats run as a single fused multi-aggregate pass per
@@ -199,11 +201,9 @@ def plan_stat_partials(
             # driver, and across incremental checkpoint runs — so the
             # stat needs NO extra scan (exact countDistinct and
             # approx_count_distinct are leftover full-scan aggregates
-            # here). The classic strategy keeps approx_count_distinct
-            # (HLL++); both are exact at small cardinality and agree
-            # within rsd elsewhere. Only emitted for the types
-            # hll_sketch_agg supports (library_agg._distinct_count_need
-            # gates on the schema).
+            # here). Only emitted for the types hll_sketch_agg
+            # supports (library_agg._distinct_count_need gates on the
+            # schema).
             rsd = float(
                 key[len("column.distinct_values.count~hll"):].split(
                     ":", 1
@@ -335,6 +335,17 @@ def violation_slice_expr(
     return F.slice(
         F.collect_list(F.when(cond, value)), 1, cap
     ).alias(alias)
+
+
+def pid_ordered_sample(rows: List[Any], alias: str, cap: int) -> List[Any]:
+    """The per-partition violation slices under ``alias``, concatenated
+    in partition-id order (deterministic) and cut at ``cap``."""
+    out: List[Any] = []
+    for r in sorted(rows, key=lambda r: r["__pid"]):
+        out.extend(r[alias] or [])
+        if len(out) >= cap:
+            break
+    return out[:cap]
 
 
 # session key -> whether ges.spark.CappedCollect is reachable (the

@@ -4717,15 +4717,15 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     of session starts per user."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # cast through timestamp_ltz: parquet TIMESTAMP_NTZ has no direct
-    # cast to epoch seconds in Spark 4
-    secs = F.col("ts").cast("timestamp_ltz").cast("long")
-    lag_secs = F.lag(F.col("ts")).over(w).cast("timestamp_ltz").cast(
-        "long"
-    )
-    gap = secs - lag_secs
+    # gap in microseconds (the timestamps' own precision), so a gap
+    # of 1800.5 s starts a session as the oracle's `> INTERVAL 30
+    # MINUTE` does; whole seconds would truncate it to 1800. Cast
+    # through timestamp_ltz: parquet TIMESTAMP_NTZ has no unix_micros
+    # in Spark 4
+    micros = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
+    gap = micros - F.lag(micros).over(w)
     new_session = F.when(
-        gap.isNull() | (gap > 30 * 60), 1
+        gap.isNull() | (gap > 30 * 60 * 1_000_000), 1
     ).otherwise(0)
     return (
         e.withColumn("new_session", new_session)

@@ -1,10 +1,12 @@
 """Declarative ANN-recall gate (expect_ann_recall_to_be_greater_than):
 the label-vs-geometry failure the ann_recall audit query exposed
 (random label buckets -> recall@3 ~0.17; learned k-means buckets ->
-~0.80) must be suite-failable, with classic/single_pass-identical
-EVRs. Runs on the driver-generated sf0.001 embeddings parquet, whose
-`label` column is deliberately non-geometric."""
+~0.80) must be suite-failable, with EVRs identical to the ones the
+engine's former two-scan plan produced (tests/expected/). Runs on the
+generated sf0.001 embeddings parquet, whose `label` column is
+deliberately non-geometric."""
 
+import json
 import os
 
 import pytest
@@ -35,14 +37,9 @@ def _gate_suite(method, min_recall):
     )
 
 
-def _run_both(df, suite):
-    classic = ges.SparkValidator(
-        df, suite, strategy="classic"
-    ).validate()
-    single = ges.SparkValidator(
-        df, suite, strategy="single_pass"
-    ).validate()
-    return classic, single
+EXPECTED_PATH = os.path.join(
+    os.path.dirname(__file__), "expected", "two_scan_plan_evrs.json"
+)
 
 
 def test_label_buckets_fail_kmeans_passes(embeddings):
@@ -71,13 +68,15 @@ def test_label_buckets_fail_kmeans_passes(embeddings):
 
 
 def test_classic_single_pass_identical_evrs(embeddings):
+    with open(EXPECTED_PATH) as f:
+        expected = json.load(f)
     for method in ("bucket", "kmeans"):
-        classic, single = _run_both(
+        (want,) = expected[f"ann_gate_{method}"]
+        got = ges.SparkValidator(
             embeddings, _gate_suite(method, 0.5)
-        )
-        c, s = classic.results[0], single.results[0]
-        assert c.success == s.success
-        assert c.result == s.result
+        ).validate().results[0]
+        assert got.success == want["success"]
+        assert json.loads(json.dumps(got.result)) == want["result"]
 
 
 def test_strict_greater_and_unmeasurable_sample(spark):

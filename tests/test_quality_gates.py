@@ -186,16 +186,13 @@ def test_metadata_gate_expectation_strategies_agree(spark):
         "expect_image_metadata_to_pass_quality_gate", mostly=0.5
     )
     results = {}
-    for strategy in ("classic", "single_pass"):
-        res = ges.SparkValidator(
-            df, s, result_format="SUMMARY", strategy=strategy
-        ).validate()
-        r = res.results[0].result
-        results[strategy] = (
-            res.results[0].success,
-            r["element_count"],
-            r["unexpected_count"],
-        )
+    res = ges.SparkValidator(df, s, result_format="SUMMARY").validate()
+    r = res.results[0].result
+    results["oneshot"] = (
+        res.results[0].success,
+        r["element_count"],
+        r["unexpected_count"],
+    )
     compiled = ges.compile_suite(
         s, df.schema, spark, result_format="SUMMARY"
     ).validate(df)
@@ -207,7 +204,7 @@ def test_metadata_gate_expectation_strategies_agree(spark):
     )
     assert len(set(results.values())) == 1, results
     # 5 of 7 fail the gate; mostly=0.5 -> unexpected 71% -> failure
-    assert results["classic"] == (False, 7, 5)
+    assert results["oneshot"] == (False, 7, 5)
 
 
 def test_metadata_gate_suite_never_reads_bytes(spark):
